@@ -2,7 +2,8 @@ package graft.operators
 
 import java.util.concurrent.{Executors, Future => JFuture, TimeUnit, TimeoutException}
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.functions.udf
 
 import graft.model.KlioMessage
 
@@ -76,34 +77,52 @@ object HandleKlio {
       retryOn: Throwable => Boolean = _ => true)
       : Dataset[Attempt] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[Attempt]
-    ds.map { msg =>
-      var attempt = 0
-      var fnNanos = 0L
-      var result: Attempt = null
-      var failFast = false
-      while (result == null || (!result.ok && !failFast && attempt <= retries)) {
-        if (attempt > 0 && retryDelayMs > 0) Thread.sleep(retryDelayMs)
-        // timer covers fn execution only — retry backoff sleeps must not
-        // inflate kmsg-timer (the reference times the wrapped call,
-        // dispatcher.py:209-236)
-        val t0 = System.nanoTime()
-        result =
-          try Attempt(runOnce(fn, msg, timeoutMs), ok = true, "")
-          catch {
-            // NonFatal only: an OutOfMemoryError must kill the task, and a
-            // task-cancellation interrupt must propagate, not become a
-            // "dropped message" that resists the kill
-            case e: InterruptedException => throw e
-            case scala.util.control.NonFatal(e) =>
-              failFast = !retryOn(e)
-              Attempt(msg, ok = false,
-                s"${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-        fnNanos += System.nanoTime() - t0
-        attempt += 1
-      }
-      result.copy(attempts = attempt, nanos = fnNanos)
+    ds.map(attempt(fn, _, retries, retryDelayMs, timeoutMs, retryOn))
+  }
+
+  /** [[apply]] with its defaults (no retry delay, every failure
+    * retryable) as a column function: a message struct column → its
+    * [[Attempt]] struct. Nondeterministic, so Catalyst never duplicates the
+    * call: `fn` runs once per row that evaluates it — under a `when`, only
+    * for the rows whose condition holds.
+    */
+  def column(fn: KlioMessage => KlioMessage, retries: Int = 0,
+      timeoutMs: Long = 0): Column => Column = {
+    val f = udf((m: KlioMessage) =>
+      attempt(fn, m, retries, 0, timeoutMs, _ => true)).asNondeterministic()
+    message => f(message)
+  }
+
+  /** One message through [[apply]]'s element-level retry loop. */
+  private def attempt(fn: KlioMessage => KlioMessage, msg: KlioMessage,
+      retries: Int, retryDelayMs: Long, timeoutMs: Long,
+      retryOn: Throwable => Boolean): Attempt = {
+    var attempt = 0
+    var fnNanos = 0L
+    var result: Attempt = null
+    var failFast = false
+    while (result == null || (!result.ok && !failFast && attempt <= retries)) {
+      if (attempt > 0 && retryDelayMs > 0) Thread.sleep(retryDelayMs)
+      // timer covers fn execution only — retry backoff sleeps must not
+      // inflate kmsg-timer (the reference times the wrapped call,
+      // dispatcher.py:209-236)
+      val t0 = System.nanoTime()
+      result =
+        try Attempt(runOnce(fn, msg, timeoutMs), ok = true, "")
+        catch {
+          // NonFatal only: an OutOfMemoryError must kill the task, and a
+          // task-cancellation interrupt must propagate, not become a
+          // "dropped message" that resists the kill
+          case e: InterruptedException => throw e
+          case scala.util.control.NonFatal(e) =>
+            failFast = !retryOn(e)
+            Attempt(msg, ok = false,
+              s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        }
+      fnNanos += System.nanoTime() - t0
+      attempt += 1
     }
+    result.copy(attempts = attempt, nanos = fnNanos)
   }
 
   /** Convenience `retryOn` for the common class-filter form

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.KlioJobRef
@@ -22,34 +22,92 @@ import graft.model.KlioJobRef
   *  - input-exists (helpers.py:91-96): messages whose input data is missing
   *    are dropped (or routed to trigger-upstream).
   *
-  * Scale note: existence checks are left-semi/anti joins of the message
-  * stream against a listing DataFrame — vectorized and shuffle-free when the
-  * listing is broadcast — never a per-element RPC like the reference's GCS
-  * `exists()` call per message (`_helpers.py:267-279`).
+  * Scale note: existence checks are joins of the message stream against a
+  * listing DataFrame — existence joins in [[route]], semi/anti joins in the
+  * split operators; vectorized and shuffle-free when the listing is
+  * broadcast — never a per-element RPC like the reference's GCS `exists()`
+  * call per message (`_helpers.py:267-279`).
   */
 object Prelude {
 
   /** A three-way routed stream, klio's TaggedStates (process / pass_thru /
-    * drop, `_helpers.py:50-54`). All three DataFrames share one lineage; a
-    * `.cache()` upstream makes the splits single-pass when materialized
-    * together.
+    * drop, `_helpers.py:50-54`): three filters of one [[route]]d frame.
+    * Each branch re-evaluates the tag when consumed on its own; to read the
+    * messages once across branches, cache the [[route]]d frame and take
+    * its [[branch]]es.
     */
   case class Routed(process: DataFrame, passThru: DataFrame, drop: DataFrame)
 
-  /** KlioFilterPing: ping messages trace the DAG without doing work. The
-    * per-message flag ORs with the data-input config's global ping, exactly
-    * like the reference (helpers.py:107-154: msg_ping if msg_ping else
-    * global_ping) — a config-level `ping: true` job does no work at all.
+  /** The column [[route]] adds: one of [[Process]], [[PassThru]] or
+    * [[Drop]] per message.
+    */
+  val RouteCol = "klio_route"
+  val Process = "process"
+  val PassThru = "pass_thru"
+  val Drop = "drop"
+
+  // The decision table's predicates, shared by the split operators and
+  // [[route]] so the two cannot drift apart. Each is null-safe: a message
+  // from a source that bypassed decode (null flags, null metadata) must
+  // land in exactly one branch — a bare null predicate excludes the row
+  // from BOTH filters, silently losing it.
+
+  /** Ping flag ORed with the data-input config's global ping, exactly like
+    * the reference (helpers.py:107-154: msg_ping if msg_ping else
+    * global_ping).
+    */
+  private def isPing(pingDefault: Boolean): Column =
+    coalesce(col("metadata.ping"), lit(false)) || lit(pingDefault)
+
+  private def isForced(forceDefault: Boolean): Column =
+    coalesce(col("metadata.force"), lit(false)) || lit(forceDefault)
+
+  /** Recipients v2: `anyone`, or `limited` with this job among the
+    * recipients; null metadata/mode is not addressed to anyone.
+    */
+  private def isAddressed(job: KlioJobRef): Column = {
+    val mode = col("metadata.intendedRecipients.mode")
+    val isRecipient = exists(col("metadata.intendedRecipients.recipients"),
+      r => r.getField("jobName") === job.jobName &&
+        r.getField("gcpProject") === job.gcpProject)
+    coalesce(mode === "anyone" || (mode === "limited" && isRecipient),
+      lit(false))
+  }
+
+  private def isTriggerOrigin(job: KlioJobRef): Column = {
+    val trig = col("metadata.intendedRecipients.triggerChildrenOf")
+    coalesce(trig.getField("jobName") === job.jobName &&
+      trig.getField("gcpProject") === job.gcpProject, lit(false))
+  }
+
+  /** The bottom-up → top-down flip (helpers.py:399-411). */
+  private def resumeTopDown(metadata: Column): Column =
+    metadata.withField("intendedRecipients.mode", lit("anyone"))
+      .withField("intendedRecipients.triggerChildrenOf",
+        lit(null).cast("struct<jobName:string,gcpProject:string>"))
+
+  private def withAuditEntry(metadata: Column, job: KlioJobRef,
+      now: Column): Column =
+    metadata.withField("jobAuditLog", concat(metadata.getField("jobAuditLog"),
+      array(struct(now.as("timestamp"), lit(job.jobName).as("jobName"),
+        lit(job.gcpProject).as("gcpProject")))))
+
+  /** Whether `element` is listed: one existence lookup. An `IN (listing)`
+    * in a projection becomes an existence join, which can neither multiply
+    * rows (a listing may hold an element twice) nor lose them; it is a
+    * broadcast hash join while the listing's size is under Spark's
+    * broadcast threshold, as a driver listing's is up to some 10^5 names.
+    */
+  private def isListed(listing: DataFrame): Column =
+    coalesce(col("element").isin(listing.select(col("element"))), lit(false))
+
+  /** KlioFilterPing: ping messages trace the DAG without doing work, so
+    * they bypass it and flow straight to the event output; a config-level
+    * `ping: true` job does no work at all.
     */
   def splitPing(df: DataFrame, pingDefault: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    // coalesce: a null flag (message from a source that bypassed decode)
-    // must land in exactly one branch — a bare null predicate excludes the
-    // row from BOTH filters, silently losing it
-    val isPing = coalesce(col("metadata.ping"), lit(false)) ||
-      lit(pingDefault)
-    (df.filter(!isPing), df.filter(isPing))
-  }
+      : (DataFrame, DataFrame) =
+    (df.filter(!isPing(pingDefault)), df.filter(isPing(pingDefault)))
 
   /** KlioGcsCheckOutputExists + KlioFilterForce, fused: messages whose
     * output already exists pass through unless forced (message flag or
@@ -60,10 +118,8 @@ object Prelude {
     val existing = broadcast(existingOutputs.select(col("element")))
     val exists = df.join(existing, Seq("element"), "left_semi")
     val missing = df.join(existing, Seq("element"), "left_anti")
-    val isForced = coalesce(col("metadata.force"), lit(false)) ||
-      lit(forceDefault)
-    (missing.unionByName(exists.filter(isForced)),
-      exists.filter(!isForced))
+    (missing.unionByName(exists.filter(isForced(forceDefault))),
+      exists.filter(!isForced(forceDefault)))
   }
 
   /** KlioGcsCheckInputExists + drop-not-found: keep messages whose input
@@ -84,24 +140,10 @@ object Prelude {
     */
   def checkRecipients(df: DataFrame, job: KlioJobRef)
       : (DataFrame, DataFrame) = {
-    val mode = col("metadata.intendedRecipients.mode")
-    val isRecipient = exists(col("metadata.intendedRecipients.recipients"),
-      r => r.getField("jobName") === job.jobName &&
-        r.getField("gcpProject") === job.gcpProject)
-    val trig = col("metadata.intendedRecipients.triggerChildrenOf")
-    val isTriggerOrigin = trig.isNotNull &&
-      trig.getField("jobName") === job.jobName &&
-      trig.getField("gcpProject") === job.gcpProject
-    // null metadata/mode (a source that bypassed decode) must go to the
-    // drop branch, not vanish from both filters
-    val keep = coalesce(
-      mode === "anyone" || (mode === "limited" && isRecipient), lit(false))
-    val flipped = df.filter(keep && isTriggerOrigin)
-      .withColumn("metadata", col("metadata")
-        .withField("intendedRecipients.mode", lit("anyone"))
-        .withField("intendedRecipients.triggerChildrenOf",
-          lit(null).cast("struct<jobName:string,gcpProject:string>")))
-    (df.filter(keep && !isTriggerOrigin).unionByName(flipped),
+    val keep = isAddressed(job)
+    val flipped = df.filter(keep && isTriggerOrigin(job))
+      .withColumn("metadata", resumeTopDown(col("metadata")))
+    (df.filter(keep && !isTriggerOrigin(job)).unionByName(flipped),
       df.filter(!keep))
   }
 
@@ -111,10 +153,7 @@ object Prelude {
     */
   def updateAuditLog(df: DataFrame, job: KlioJobRef,
       now: Column = current_timestamp()): DataFrame =
-    df.withColumn("metadata", col("metadata").withField("jobAuditLog",
-      concat(col("metadata.jobAuditLog"),
-        array(struct(now.as("timestamp"), lit(job.jobName).as("jobName"),
-          lit(job.gcpProject).as("gcpProject"))))))
+    df.withColumn("metadata", withAuditEntry(col("metadata"), job, now))
 
   /** KlioTriggerUpstream's metadata rewrite (helpers.py:702-734): address
     * the message to {upstream, this job} in limited mode with
@@ -135,10 +174,55 @@ object Prelude {
         struct(lit(self.jobName).as("jobName"),
           lit(self.gcpProject).as("gcpProject"))))
 
-  /** The full default prelude in the reference's order
-    * (run.py:511-558): recipients → audit → ping → output-exists(+force) →
-    * input-exists → drop. Returns process / pass_thru (ping ∪ skipped) /
-    * drop (wrong recipient ∪ input missing).
+  /** The full default prelude in the reference's order (run.py:511-558) as
+    * ONE routing decision per message: recipients → audit → ping →
+    * output-exists(+force) → input-exists. Returns the messages with a
+    * [[RouteCol]] tag, all computed in a single projection: pass_thru is
+    * ping ∪ skipped, drop is wrong recipient ∪ input missing. Messages
+    * addressed to this job carry the audit entry (and the origin flip);
+    * wrong-recipient drops keep their metadata untouched. Each listing is
+    * one existence lookup, so reading the tagged frame once reads the
+    * messages once, whichever branches consume it.
+    */
+  def route(df: DataFrame, job: KlioJobRef,
+      existingInputs: Option[DataFrame],
+      existingOutputs: Option[DataFrame],
+      forceDefault: Boolean = false,
+      pingDefault: Boolean = false,
+      now: Column = current_timestamp()): DataFrame = {
+    val metadata = col("metadata")
+    val addressed = withAuditEntry(
+      when(isTriggerOrigin(job), resumeTopDown(metadata)).otherwise(metadata),
+      job, now)
+    val outputExists = existingOutputs.fold(lit(false))(isListed)
+    val inputExists = existingInputs.fold(lit(true))(isListed)
+    val tag = when(!isAddressed(job), Drop)
+      .when(isPing(pingDefault), PassThru)
+      .when(outputExists && !isForced(forceDefault), PassThru)
+      .when(!inputExists, Drop)
+      .otherwise(Process)
+    df.withColumns(Map(
+      "metadata" -> when(isAddressed(job), addressed).otherwise(metadata),
+      RouteCol -> tag))
+  }
+
+  /** One route of a [[route]]d frame, tag dropped. */
+  def branch(tagged: DataFrame, r: String): DataFrame =
+    tagged.filter(col(RouteCol) === r).drop(RouteCol)
+
+  /** Per-route message counts of a [[route]]d frame, observed by the first
+    * action that reads it; `obs.get(Drop)` etc. then read them. A count,
+    * not a sum, so an empty frame reads 0, not null.
+    */
+  def observeRoutes(tagged: DataFrame, obs: Observation): DataFrame =
+    tagged.observe(obs,
+      count(when(col(RouteCol) === Process, 1)).as(Process),
+      count(when(col(RouteCol) === PassThru, 1)).as(PassThru),
+      count(when(col(RouteCol) === Drop, 1)).as(Drop))
+
+  /** The standard prelude as klio's three TaggedStates: process / pass_thru
+    * (ping ∪ skipped) / drop (wrong recipient ∪ input missing), each a
+    * filter of the one [[route]]d frame.
     */
   def standard(df: DataFrame, job: KlioJobRef,
       existingInputs: Option[DataFrame],
@@ -146,19 +230,10 @@ object Prelude {
       forceDefault: Boolean = false,
       pingDefault: Boolean = false,
       now: Column = current_timestamp()): Routed = {
-    val (addressed, wrongRecipient) = checkRecipients(df, job)
-    val audited = updateAuditLog(addressed, job, now)
-    val (work0, pinged) = splitPing(audited, pingDefault)
-    val (work1, skipped) = existingOutputs match {
-      case Some(outs) => splitOutputExists(work0, outs, forceDefault)
-      case None => (work0, work0.filter(lit(false)))
-    }
-    val (found, notFound) = existingInputs match {
-      case Some(ins) => splitInputExists(work1, ins)
-      case None => (work1, work1.filter(lit(false)))
-    }
-    Routed(found, pinged.unionByName(skipped),
-      wrongRecipient.unionByName(notFound))
+    val tagged = route(df, job, existingInputs, existingOutputs,
+      forceDefault, pingDefault, now)
+    Routed(branch(tagged, Process), branch(tagged, PassThru),
+      branch(tagged, Drop))
   }
 
   /** KlioDebugMessage (helpers.py:477-520): log each element with a prefix

@@ -19,9 +19,8 @@ object PreludeQueries {
 
   private def messages(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
-    // NOT cached: measured at sf0.1, the ~8 branch re-reads of this narrow
-    // projection cost less than the cache materialization — planning, not
-    // scanning, dominates this query
+    // NOT cached: measured at sf0.1, the split operators' branch re-reads
+    // of this narrow projection cost less than a cache materialization
     e.select(KlioWire.newMessageColumns(col("event_id")): _*)
       .withColumn("metadata", col("metadata")
         .withField("ping", col("element").cast("long") % 5 === 0)
@@ -39,14 +38,8 @@ object PreludeQueries {
       .select(col("event_id").cast("string").as("element"))
     val existingInputs = e.filter(col("event_id") % 7 =!= 0)
       .select(col("event_id").cast("string").as("element"))
-    val routed = Prelude.standard(msgs, job,
-      Some(existingInputs), Some(existingOutputs))
-    routed.process.select(col("element"), lit("process").as("route"))
-      .unionByName(routed.passThru.select(col("element"),
-        lit("pass_thru").as("route")))
-      .unionByName(routed.drop.select(col("element"),
-        lit("drop").as("route")))
-      .groupBy(col("route"))
+    Prelude.route(msgs, job, Some(existingInputs), Some(existingOutputs))
+      .groupBy(col(Prelude.RouteCol).as("route"))
       .agg(count(lit(1)).as("n"),
         sum(col("element").cast("long")).as("checksum"))
       .orderBy(col("route"))

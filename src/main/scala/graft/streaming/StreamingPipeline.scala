@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 
 import graft.config.KlioConfig
-import graft.model.{KlioJobRef, KlioWire}
+import graft.model.KlioWire
 import graft.operators.Prelude
+import graft.runner.KlioPipeline
 
 /** Streaming mode — the reference's default (`pipeline_options.streaming:
   * True`, config/core.py:361): Pub/Sub in → prelude → transforms → Pub/Sub
@@ -57,44 +57,34 @@ object StreamingPipeline {
   /** Prelude + per-microbatch user transform + wire sink. Existence
     * listings are re-resolved per micro-batch (foreachBatch), matching the
     * reference's read-time existence checks rather than a stale static
-    * snapshot.
+    * snapshot. One Spark action per micro-batch: the wire write, which
+    * reads the batch once through the cached [[Prelude.route]]d frame and
+    * carries the dropped count.
     */
   def run(spark: SparkSession, cfg: KlioConfig, inputDir: String,
       outputDir: String, checkpoint: String,
       transform: DataFrame => DataFrame): DataStreamWriter[Row] = {
     val stream = readEvents(spark, inputDir,
       cfg.jobConfig.allowNonKlioMessages)
-    val job = cfg.jobRef
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two actions consume this micro-batch (the wire write and the
-        // drop count) — persist so the source parse + routing joins run
-        // once, not once per action
-        batch.persist()
+        val counts = Observation("klio_route")
+        val tagged = KlioPipeline.prelude(batch.sparkSession, cfg)(batch,
+          counts).cache()
         try {
-          val s = batch.sparkSession
-          val dataIn = cfg.jobConfig.data.inputs.headOption
-            .filterNot(io => io.skipExistenceCheck || io.location.isEmpty)
-            .map(io => Prelude.listingFor(s, io.location, io.fileSuffix))
-          val dataOut = cfg.jobConfig.data.outputs.headOption
-            .filterNot(io => io.skipExistenceCheck || io.location.isEmpty)
-            .map(io => Prelude.listingFor(s, io.location, io.fileSuffix))
-          val routed = Prelude.standard(batch, job, dataIn, dataOut,
-            forceDefault =
-              cfg.jobConfig.data.outputs.headOption.exists(_.force),
-            pingDefault = cfg.jobConfig.data.inputs.headOption.exists(_.ping))
-          val out = transform(routed.process).unionByName(routed.passThru)
+          val out = transform(Prelude.branch(tagged, Prelude.Process))
+            .unionByName(Prelude.branch(tagged, Prelude.PassThru))
           KlioWire.encode(out).write.mode("append").text(outputDir)
           // drops never vanish silently (reference logs every one,
           // helpers.py:264-284): count per micro-batch and log
-          val nDropped = routed.drop.count()
+          val nDropped = counts.get(Prelude.Drop).asInstanceOf[Long]
           if (nDropped > 0)
             org.apache.log4j.Logger.getLogger("graft.klio.streaming")
               .warn(s"batch $batchId: dropped $nDropped message(s) " +
                 "(wrong recipient or missing input)")
-        } finally batch.unpersist()
+        } finally tagged.unpersist()
         ()
       }
   }

@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.config.KlioConfig
+import graft.config.{KlioConfig, KlioIoConfig}
 import graft.io.EventIO
 import graft.model.KlioWire
+import graft.operators.Metrics
 import graft.runner.KlioPipeline
 
 /** End-to-end mirror of the reference's `integration/batch-modular-default`
@@ -23,11 +24,14 @@ class PipelineEndToEndSpec extends AnyFunSuite {
     Files.writeString(Paths.get(path), content)
   }
 
-  test("batch-modular-default shape runs end to end") {
+  /** The golden job's inputs under a fresh directory: 15 ids, input audio
+    * for the 14 real tracks, output already done for 2 of them. Returns
+    * the directory, the ids and the job's config.
+    */
+  def goldenJob(): (String, Seq[String], KlioConfig) = {
     val base = Files.createTempDirectory("graft-e2e").toString
     val ids = (0 until 14).map(i => f"track_$i%02d") :+ "id_does_not_exist"
     write(s"$base/ids.txt", ids.mkString("\n"))
-    // input audio exists for all real tracks; output already done for 2
     (0 until 14).foreach(i => write(f"$base/audio_in/track_$i%02d.ogg", "x"))
     Seq(0, 7).foreach(i => write(f"$base/audio_out/track_$i%02d.wav", "y"))
 
@@ -56,17 +60,84 @@ class PipelineEndToEndSpec extends AnyFunSuite {
          |        location: $base/audio_out
          |        file_suffix: .wav
          |""".stripMargin)
+    (base, ids, cfg)
+  }
 
+  /** 14 with input − 2 already done; the 2 existing outputs skipped; the
+    * missing input dropped.
+    */
+  val goldenSummary = KlioPipeline.RunSummary(12, 2, 1)
+
+  def withEventOutputs(cfg: KlioConfig, outputs: KlioIoConfig*)
+      : KlioConfig =
+    cfg.copy(jobConfig = cfg.jobConfig.copy(
+      events = cfg.jobConfig.events.copy(outputs = outputs)))
+
+  def lines(dir: String): Seq[String] =
+    spark.read.text(dir).collect().map(_.getString(0)).sorted.toSeq
+
+  test("batch-modular-default shape runs end to end") {
+    val (base, ids, cfg) = goldenJob()
     val summary = KlioPipeline.run(spark, cfg,
       m => m.copy(payload = s"processed:${m.element}"))
+    assert(summary === goldenSummary)
+    assert(lines(s"$base/ids_out") ===
+      ids.filterNot(_ == "id_does_not_exist").sorted)
+  }
 
-    assert(summary.processed === 12) // 14 with input − 2 already done
-    assert(summary.passedThru === 2) // existing outputs skipped
-    assert(summary.dropped === 1) // missing input
+  test("batch-modular-default runs in at most 4 Spark jobs and reads " +
+      "its event input once") {
+    // one routing decision per message and one pass per run: a broadcast
+    // per data listing, then the write, which the routing counts ride on
+    Metrics.install(spark)
+    val (_, _, cfg) = goldenJob()
+    val readsBefore = Metrics.collected.keySet.toSet
+    TransformCalls.n.set(0)
+    val (summary, jobs) = SparkJobs.counted(spark) {
+      KlioPipeline.run(spark, cfg, m => {
+        TransformCalls.n.incrementAndGet()
+        m.copy(payload = "processed")
+      })
+    }
+    assert(summary === goldenSummary)
+    assert(jobs.size <= 4, s"${jobs.size} Spark jobs: $jobs")
+    assert(TransformCalls.n.get === 12, "one call per processed message")
+    val reads = Metrics.collected.collect {
+      case (k @ (_, "kmsg-read"), v) if !readsBefore(k) => v
+    }
+    assert(reads.toSeq === Seq(15L), "kmsg-read of the run's one event input")
+  }
 
-    val out = spark.read.text(s"$base/ids_out")
-      .collect().map(_.getString(0)).sorted
-    assert(out === ids.filterNot(_ == "id_does_not_exist").sorted)
+  test("two event outputs are written identically; the transform runs " +
+      "once per message") {
+    val (base, _, golden) = goldenJob()
+    val cfg = withEventOutputs(golden, KlioIoConfig("wire", s"$base/w1"),
+      KlioIoConfig("wire", s"$base/w2"))
+    TransformCalls.n.set(0)
+    val summary = KlioPipeline.run(spark, cfg, m => {
+      TransformCalls.n.incrementAndGet()
+      m.copy(payload = s"processed:${m.element}")
+    })
+    assert(summary === goldenSummary)
+    assert(TransformCalls.n.get === 12, "one call per processed message")
+    assert(lines(s"$base/w1").size === 14)
+    assert(lines(s"$base/w1") === lines(s"$base/w2"))
+  }
+
+  test("no event outputs: the run still returns its routing counts") {
+    val (_, _, golden) = goldenJob()
+    val summary = KlioPipeline.run(spark, withEventOutputs(golden),
+      m => m.copy(payload = "processed"))
+    assert(summary === goldenSummary)
+  }
+
+  test("an empty event file routes nothing and counts zeros") {
+    val (base, _, cfg) = goldenJob()
+    write(s"$base/ids.txt", "")
+    val summary = KlioPipeline.run(spark, cfg,
+      m => m.copy(payload = "processed"))
+    assert(summary === KlioPipeline.RunSummary(0, 0, 0))
+    assert(lines(s"$base/ids_out").isEmpty)
   }
 
   test("wire JSON roundtrip preserves the full envelope") {

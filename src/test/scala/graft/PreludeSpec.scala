@@ -83,6 +83,96 @@ class PreludeSpec extends AnyFunSuite {
       === Array("lost", "not_ours"))
   }
 
+  test("route gives the split operators' decision table, one row per " +
+      "message") {
+    import org.apache.spark.sql.DataFrame
+    val now = to_timestamp(lit("2024-01-01 00:00:00"))
+    val upstream = KlioJobRef("up-job", "test-project")
+    val addressing = Seq(
+      "anyone" -> KlioRecipients("anyone"),
+      "limitedUs" -> KlioRecipients("limited", Seq(job)),
+      "limitedOther" -> KlioRecipients("limited", Seq(otherJob)),
+      // bottom-up backfill reaching its origin: flips back to anyone
+      "origin" -> KlioRecipients("limited", Seq(upstream, job), Some(job)),
+      "notOrigin" -> KlioRecipients("limited", Seq(job), Some(otherJob)))
+    val flags = Seq("f", "t", "null")
+    // every addressing × ping × force × output exists × input exists
+    val grid = for {
+      (a, r) <- addressing; p <- flags; f <- flags
+      out <- Seq(false, true); in <- Seq(false, true)
+    } yield (s"$a-p$p-f$f-o$out-i$in", r, p, f, out, in)
+    val base = grid.map { case (e, r, p, f, _, _) =>
+      msg(e, ping = p == "t", force = f == "t", recipients = r) } ++
+      Seq(msg("nullMetadata-a"), msg("nullMetadata-b"))
+    def nulled(flag: String) = grid.collect {
+      case (e, _, p, f, _, _) if (if (flag == "ping") p else f) == "null" =>
+        e }
+    val messages = base.toDS().toDF()
+      .withColumn("metadata", when(col("element").startsWith("nullMetadata"),
+        lit(null)).otherwise(col("metadata")))
+      .withColumn("metadata", when(col("element").isin(nulled("ping"): _*),
+        col("metadata").withField("ping", lit(null).cast("boolean")))
+        .otherwise(col("metadata")))
+      .withColumn("metadata", when(col("element").isin(nulled("force"): _*),
+        col("metadata").withField("force", lit(null).cast("boolean")))
+        .otherwise(col("metadata")))
+    // each listing holds every element twice: still one row per message
+    def twice(es: Seq[String]) = (es ++ es).toDF("element")
+    val inputs = twice(grid.collect { case (e, _, _, _, _, true) => e } :+
+      "nullMetadata-a")
+    val outputs = twice(grid.collect { case (e, _, _, _, true, _) => e })
+
+    def bySplits(ins: Option[DataFrame], outs: Option[DataFrame],
+        force: Boolean, ping: Boolean): DataFrame = {
+      val (addressed, wrongRecipient) = Prelude.checkRecipients(messages, job)
+      val audited = Prelude.updateAuditLog(addressed, job, now)
+      val (work0, pinged) = Prelude.splitPing(audited, ping)
+      val (work1, skipped) = outs.fold((work0, work0.limit(0)))(
+        Prelude.splitOutputExists(work0, _, force))
+      val (found, notFound) = ins.fold((work1, work1.limit(0)))(
+        Prelude.splitInputExists(work1, _))
+      Seq(found -> Prelude.Process, pinged -> Prelude.PassThru,
+        skipped -> Prelude.PassThru, wrongRecipient -> Prelude.Drop,
+        notFound -> Prelude.Drop)
+        .map { case (d, r) => d.withColumn(Prelude.RouteCol, lit(r)) }
+        .reduce(_ unionByName _)
+    }
+    def rows(df: DataFrame): Seq[(String, String, String)] =
+      df.select(col("element"), col(Prelude.RouteCol),
+        to_json(col("metadata"))).as[(String, String, String)]
+        .collect().toSeq.sorted
+
+    for {
+      (ins, outs) <- Seq((Some(inputs), Some(outputs)), (None, None),
+        (Some(inputs), None), (None, Some(outputs)))
+      (force, ping) <- Seq((false, false), (true, false), (false, true))
+    } {
+      val tagged = Prelude.route(messages, job, ins, outs, force, ping, now)
+      val got = rows(tagged)
+      assert(got === rows(bySplits(ins, outs, force, ping)),
+        s"inputs ${ins.isDefined}, outputs ${outs.isDefined}, " +
+          s"force $force, ping $ping")
+      assert(got.map(_._1) === base.map(_.element).sorted,
+        "every message exactly once")
+    }
+    // the table's corners, spelled out
+    val routes = rows(Prelude.route(messages, job, Some(inputs),
+      Some(outputs), now = now)).map(r => r._1 -> r._2).toMap
+    assert(routes("anyone-pf-ff-ofalse-itrue") === Prelude.Process)
+    assert(routes("anyone-pnull-fnull-otrue-itrue") === Prelude.PassThru)
+    assert(routes("anyone-pf-fnull-ofalse-ifalse") === Prelude.Drop)
+    assert(routes("anyone-pf-ft-otrue-itrue") === Prelude.Process)
+    assert(routes("limitedOther-pt-ft-otrue-itrue") === Prelude.Drop)
+    assert(routes("nullMetadata-a") === Prelude.Drop)
+    val origin = Prelude.route(messages, job, Some(inputs), Some(outputs),
+      now = now).filter(col("element") === "origin-pf-ff-ofalse-itrue")
+      .select(col("metadata.intendedRecipients.mode"),
+        col("metadata.intendedRecipients.triggerChildrenOf"),
+        col(Prelude.RouteCol)).collect().head
+    assert(origin.getString(0) === "anyone" && origin.isNullAt(1) &&
+      origin.getString(2) === Prelude.Process)
+  }
+
   test("config-level global ping routes everything to pass_thru") {
     // helpers.py:107-154 — msg ping ORs with the data-input config's ping;
     // a ping:true job traces the DAG without doing any work.

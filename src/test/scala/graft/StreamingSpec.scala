@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -177,6 +179,71 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.count(_.contains("track_lost")) === 0)
     assert(out.count(_.contains("done:track_a")) === 1)
     assert(out.length === 2) // track_a + track_ping processed, lost dropped
+  }
+
+  test("a micro-batch reads its input once, transforms each message " +
+      "once and logs its drops") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val base = Files.createTempDirectory("graft-stream-once").toString
+    Seq("a1", "a2", "a3", "b1").foreach(e =>
+      write(s"$base/audio_in/$e.ogg", "x"))
+    val cfg = KlioConfig.fromYaml(
+      s"""version: 2
+         |job_name: stream-once-job
+         |pipeline_options:
+         |  streaming: True
+         |  project: test-project
+         |job_config:
+         |  allow_non_klio_messages: True
+         |  data:
+         |    inputs:
+         |      - type: gcs
+         |        location: $base/audio_in
+         |        file_suffix: .ogg
+         |""".stripMargin)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("stream-drops", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft.klio.streaming")
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    // nondeterministic: Catalyst may not duplicate the call
+    val calls = udf { (e: String) =>
+      TransformCalls.n.incrementAndGet(); s"done:$e" }.asNondeterministic()
+    TransformCalls.n.set(0)
+    // wave 1: 3 processed, 2 dropped (missing input); wave 2: 1 processed,
+    // published by an atomic rename so no trigger sees it half written
+    write(s"$base/in/wave1.txt",
+      Seq("a1", "a2", "a3", "lost1", "lost2").mkString("\n"))
+    write(s"$base/staged/wave2.txt", "b1")
+    val q = StreamingPipeline.run(spark, cfg, s"$base/in", s"$base/out",
+      s"$base/ckpt",
+      batch => batch.withColumn("payload", calls(col("element")))).start()
+    try {
+      q.processAllAvailable()
+      Files.move(Paths.get(s"$base/staged/wave2.txt"),
+        Paths.get(s"$base/in/wave2.txt"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      logger.removeAppender(capture)
+    }
+    val reports = q.recentProgress.filter(_.numInputRows > 0)
+    assert(reports.map(_.numInputRows).toSeq === Seq(5L, 1L),
+      "each report counts the lines published, read once")
+    assert(TransformCalls.n.get === 4, "one transform call per message")
+    val out = spark.read.text(s"$base/out").collect().map(_.getString(0))
+    assert(out.length === 4)
+    assert(warnings.asScala.exists(_.contains("dropped 2 message(s)")),
+      s"drop warning missing: ${warnings.asScala.toSeq}")
   }
 
   test("e2e golden: checkpoint restart resumes mid-stream without replay") {
